@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout. Queries are materialized through the noop sink
   * so every output column is computed (a bare .count() lets Catalyst prune
@@ -10,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the host's actual core count (capped at 32): oversubscribing
-    // local[N] skews the steady-state timings the warm pass stabilizes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Harness.cpus
     // Host-speed canary: a fixed 2e9-step-per-thread xorshift loop. Bench
     // totals are only comparable across rounds modulo host speed — rounds
     // 7/8 both measured a BROAD ~1.2x inflation (median per-query ratio
@@ -29,25 +24,10 @@ object Bench {
     // post > pre or mt-per-thread >> single, in the same record it inflated.
     def canaryOnce(threads: Int): Double = graft.engine.HostCanary.once(threads)
     val canary = canaryOnce(1)
-    val canaryMt = canaryOnce(cpus.toInt)
+    val canaryMt = canaryOnce(cpus)
     System.err.println(
       f"[bench] host canary pre: ${canary}%.2f s (1 thread), ${canaryMt}%.2f s (${cpus}%s threads, 2e9 steps each)")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // Experiment knob (measurement-only, like the rejected AQE
-    // initial-partition knob): the pair family's residual 1024× tail is
-    // shuffle-WRITE bandwidth, so the shuffle/spill codec trades CPU for
-    // written bytes. lz4 (default) vs zstd is measured in SCALE.md; the
-    // default stands unless the env asks otherwise.
-    sys.env.get("SPARK_GRAFT_IO_CODEC").foreach(c =>
-      builder.config("spark.io.compression.codec", c))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
       val failed = try {
@@ -155,7 +135,7 @@ object Bench {
     // closing bracket of the canary: same loops, after the suite — a load
     // episode that arrived mid-run is visible as post >> pre
     val canaryPost = canaryOnce(1)
-    val canaryMtPost = canaryOnce(cpus.toInt)
+    val canaryMtPost = canaryOnce(cpus)
     System.err.println(
       f"[bench] host canary post: ${canaryPost}%.2f s (1 thread), ${canaryMtPost}%.2f s (${cpus}%s threads)")
     val canaryFields =

@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Topology introspection (SURVEY.md L1, `topology.describe()` parity):
-  * dump the formatted physical plan of representative queries to PLANS.md —
-  * the evidence for the pushdown/broadcast/codegen claims in SCALE.md.
+  * formatted physical plans on the harness session, so Exchange counts and
+  * join strategies match what Bench runs. Two output shapes:
   *
-  * Usage: `sbt "runMain graft.Plans [sfDir] [outFile]"`
+  *   - `sbt "runMain graft.Plans [sfDir] [outFile]"` dumps representative
+  *     queries to PLANS.md — the evidence for the pushdown/broadcast/codegen
+  *     claims in SCALE.md;
+  *   - `sbt "runMain graft.Plans <sfDir> <outDir> <suffix> <q1> [q2...]"`
+  *     writes one `<outDir>/<query>_<suffix>.txt` per named query, the
+  *     optimization-round evidence trail (`plans/rNN/<query>_{before,after}.txt`).
   */
 object Plans {
   private val representative = Seq(
@@ -75,24 +79,34 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans (generated by `graft.Plans`)\n\n")
-    sb.append(s"Source: `$sfDir`. Regenerate: `sbt \"runMain graft.Plans\"`.\n")
-    representative.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+    val spark = Harness.session()
+    // between dumps: some queries register caches whose lifetime Bench
+    // manages with releaseAll; mirror that so later dumps see clean state
+    def plan(name: String): String =
+      try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+      finally {
+        graft.engine.QueryCaches.releaseAll(spark, blocking = true)
+        spark.catalog.clearCache()
+      }
+    if (args.length >= 4) {
+      val Array(outDir, suffix) = args.slice(1, 3)
+      Files.createDirectories(Paths.get(outDir))
+      args.drop(3).foreach { name =>
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
+          s"# $name ($suffix) — sfDir=$sfDir cpus=${Harness.cpus}\n${plan(name)}")
+        println(s"[plans] wrote $outDir/${name}_$suffix.txt")
+      }
+    } else {
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans (generated by `graft.Plans`)\n\n")
+      sb.append(s"Source: `$sfDir`. Regenerate: `sbt \"runMain graft.Plans\"`.\n")
+      representative.foreach { name =>
+        sb.append(s"\n## $name\n\n```\n${plan(name)}```\n")
+      }
+      Files.writeString(Paths.get(out), sb.toString)
+      println(s"[plans] wrote $out")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plans] wrote $out")
     spark.stop()
   }
 }

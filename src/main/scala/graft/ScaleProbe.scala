@@ -33,148 +33,22 @@ object ScaleProbe {
     val coll = prefix.as("a").join(prefix.as("b"),
       col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
     val feasible = graft.llm.Dedup.positionalFeasible(num, den)
-    val shipped = feasible && graft.llm.Dedup.indexPrefixFeasible(num, den)
     val rawRows = coll.count()
     val posRows = coll.filter(feasible).count()
-    val shipRows = coll.filter(shipped).count()
     val rawPairs = coll.select(col("a.doc_id"), col("b.doc_id")).distinct().count()
     val posPairs = coll.filter(feasible)
-      .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
-    val shipPairs = coll.filter(shipped)
       .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
     val finalPairs = graft.llm.Dedup.ngramJaccardPairsPrefix(
       graft.engine.Tables.documents(spark, dir), 3, num, den).count()
     println(f"[probe]   prefixstat t=$num/$den rawRows=$rawRows posRows=$posRows " +
       f"(keep=${posRows.toDouble / math.max(1, rawRows)}%.3f) " +
-      f"shipRows=$shipRows (keep=${shipRows.toDouble / math.max(1, rawRows)}%.3f) " +
-      f"rawPairs=$rawPairs posPairs=$posPairs shipPairs=$shipPairs finalPairs=$finalPairs")
-    shipRows
-  }
-
-  /** Pass-level wall profile of the prefix-path ngram join — the
-    * candidate-INDEPENDENT postings-linear passes (kernel+posts fill, df
-    * join + rank window = prefix fill, docsets build) vs the
-    * candidate-DEPENDENT tail (self-join + dedup + verify joins), timed by
-    * materializing each stage in sequence. Also prints the hapax share
-    * (round-11 prune: df=1 postings can never collide and concentrate in
-    * prefixes — dropped inside [[graft.llm.Dedup.rankedPrefix]]).
-    */
-  private def ngramPhase(spark: SparkSession, dir: String, num: Int, den: Int): Long = {
-    import org.apache.spark.sql.functions.{col, collect_list, count, lit, sort_array}
-    def timed[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a = body
-      println(f"[probe]   ngramphase $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-    // the r12 shipping passes: the postings cache is filled h-partitioned
-    // in the wide regime (width from the sampled estimate) so the
-    // df-attach runs exchange-free, and ONE per-doc table (df join +
-    // per-doc array slice + verification arrays, one doc-keyed exchange)
-    // backs both the prefix relation and the verify docsets — the old
-    // separate prefix-window and docsets passes are gone (wide regime)
-    val (posts, byH) = timed("posts-fill (estimator + kernel + cache)") {
-      graft.llm.Dedup.prefixPostsCache(
-        graft.engine.Tables.documents(spark, dir), 3)
-    }
-    val nPosts = posts.count()
-    println(s"[probe]   ngramphase posts=$nPosts byH=$byH")
-    val parts = graft.engine.Sizing.partsFor(
-      spark, nPosts, graft.engine.Sizing.PostingRowsPerPartition)
-    val wide = nPosts >= graft.llm.Dedup.VerifyHashJoinMinPosts
-    val prefix = if (wide) {
-      val fat = timed("doc-table-fill (df join + per-doc arrays)") {
-        graft.llm.Dedup.prefixDocTable(posts, num, den, parts, byH)
-      }
-      timed("prefix-derive (posexplode off the doc table)") {
-        graft.llm.Dedup.prefixFromDocTable(fat)
-          .transform(graft.engine.QueryCaches.registered)
-      }
-    } else timed("prefix-fill (df join + rank window)") {
-      graft.llm.Dedup.rankedPrefix(posts, num, den)
-        .transform(graft.engine.QueryCaches.registered)
-    }
-    println(s"[probe]   ngramphase prefixRows=${prefix.count()}")
-    // end-to-end on the same warm caches: the remainder is the
-    // candidate-dependent tail (self-join + dedup + verify + size attach)
-    timed("full-query (warm caches)") {
-      graft.llm.Dedup.ngramJaccardPairsPrefixFromPosts(posts, num, den, byH).count()
-    }
-  }
-
-  /** Pass-level wall profile of the banded MinHash+LSH join — the same
-    * attribution form as [[ngramPhase]], for the family member whose
-    * candidate stream comes from band collisions instead of prefix
-    * collisions. Passes mirror the SHIPPING wide-regime order (the
-    * round-10 advice law: a probe that re-implements the pipeline drifts):
-    * posts fill (shared verification cache), docsets build, signature fill
-    * (wide regime: off the docsets cache via the from-hashes kernel — the
-    * second full text scan was cut in round 11; fixture regime: the
-    * per-row text kernel), band self-join candidates, length prune, then
-    * the full query on the same warm caches (the remainder is the verify
-    * tail).
-    */
-  private def minhashPhase(spark: SparkSession, dir: String,
-                           num: Int, den: Int): Long = {
-    import org.apache.spark.sql.functions.col
-    def timed[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val a = body
-      println(f"[probe]   minhashphase $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-    val docs = graft.engine.Tables.documents(spark, dir)
-    val posts = timed("posts-fill") {
-      graft.llm.Dedup.shinglePostings(docs, 3)
-        .transform(graft.engine.QueryCaches.registered)
-    }
-    val nPosts = posts.count()
-    val parts = graft.engine.Sizing.partsFor(
-      spark, nPosts, graft.engine.Sizing.PostingRowsPerPartition)
-    val nDocs = docs.count()
-    val wide = nDocs > graft.llm.Dedup.SizesBroadcastMax
-    val docsets = timed("docsets-build") {
-      graft.llm.Dedup.docsetsOf(posts, parts) // registers its own cache
-    }
-    val sigs = timed(if (wide) "sig-fill (from docsets)" else "sig-fill (text kernel)") {
-      val s =
-        if (wide) docsets.select(col("doc_id"),
-          graft.functions.TextFunctions.graftMinhashSigFromHashes(col("hs"), 64).as("sig"))
-        else graft.llm.Dedup.minhashSignatures(docs, 3, 64)
-      s.transform(graft.engine.QueryCaches.registered)
-    }
-    println(s"[probe]   minhashphase posts=$nPosts sigs=${sigs.count()}")
-    val cands = timed("band-self-join (candidates)") {
-      val c = graft.llm.Dedup.bandCandidates(sigs, 64, 16,
-          parts = if (wide) Some(parts) else None)
-        .transform(graft.engine.QueryCaches.registered)
-      println(s"[probe]   minhashphase candidates=${c.count()}")
-      c
-    }
-    val sizes = docsets.select(col("doc_id"), org.apache.spark.sql.functions
-      .size(col("hs")).cast("long").as("n_sh"))
-    timed("length-prune") {
-      println(s"[probe]   minhashphase pruned=${graft.llm.Dedup.lengthCompatible(
-        cands, sizes, num, den, parts, Some(docs.count())).count()}")
-    }
-    // end-to-end on the same warm caches: remainder = verify tail
-    timed("full-query (warm caches)") {
-      graft.llm.Dedup.minhashLshPairs(docs, 3, 64, 16, num, den).count()
-    }
+      f"rawPairs=$rawPairs posPairs=$posPairs finalPairs=$finalPairs")
+    posRows
   }
 
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     args.tail.foreach { spec =>
       val t0 = System.nanoTime()
       val rows = spec match {
@@ -341,111 +215,6 @@ object ScaleProbe {
             f"fixed(np=$np)=${fixedS}%.1f s warm/fixed=${warmS / fixedS}%.2f " +
             f"(pairs cold=$coldCnt warm=$warmCnt fixed=$fixedCnt)")
           warmCnt
-        // minimal reproduction of the repartition-width rewrite seen at
-        // 1024x: does repartition(266, col) survive to the physical plan?
-        case "repro266" =>
-          import org.apache.spark.sql.functions.col
-          val df = spark.range(100000).toDF("doc_a")
-          val r = df.repartition(266, col("doc_a"))
-          println("==== bare repartition ====")
-          println(r.queryExecution.executedPlan.toString.take(1200))
-          val other = spark.range(1000).toDF("doc_a")
-            .withColumn("v", col("doc_a") * 2)
-          val j = r.join(other.hint("shuffle_hash"), "doc_a")
-          println("==== repartition under shuffle_hash join ====")
-          println(j.queryExecution.executedPlan.toString.take(2500))
-          j.count()
-        // faithful-shape reproduction: distinct -> repartition(266, a) ->
-        // SHJ(build=cached docsets) -> repartition(266, b) -> SHJ ->
-        // size-reattach joins on top (the verifiedPairCounts topology)
-        case "reprowide" =>
-          import org.apache.spark.sql.functions.{array, col}
-          val cand = spark.range(100000)
-            .select((col("id") % 1000).as("doc_a"), (col("id") % 997).as("doc_b"))
-            .distinct()
-          val docsets = graft.engine.QueryCaches.registered(
-            spark.range(1000).select(col("id").as("doc_id"), array(col("id")).as("hs")))
-          val j1 = cand.repartition(266, col("doc_a"))
-            .join(docsets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-              .hint("shuffle_hash"), "doc_a")
-          val j2 = j1.repartition(266, col("doc_b"))
-            .join(docsets.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
-              .hint("shuffle_hash"), "doc_b")
-            .select(col("doc_a"), col("doc_b"),
-              graft.functions.VectorFunctions.graftSortedIntersectCount(
-                col("hs_a"), col("hs_b")).as("n_common"))
-          val sizes = spark.range(1000).select(col("id").as("doc_id"), col("id").as("n_sh"))
-          val top = j2
-            .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("size_a")), "doc_a")
-            .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("size_b")), "doc_b")
-          println("==== reprowide plan ====")
-          println(top.queryExecution.executedPlan.toString.take(6000))
-          top.count()
-        // bisect step: REAL bandCandidates subtree + fake docsets — does
-        // the repartition width survive?
-        case "reprocand" =>
-          import org.apache.spark.sql.functions.{array, col}
-          val docs = graft.engine.Tables.documents(spark, dir)
-          val cand = graft.llm.Dedup.bandCandidates(
-            graft.llm.Dedup.minhashSignatures(docs, 3, 64), 64, 16)
-          val docsets = graft.engine.QueryCaches.registered(
-            spark.range(1000).select(col("id").as("doc_id"), array(col("id")).as("hs")))
-          val j1 = cand.repartition(266, col("doc_a"))
-            .join(docsets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-              .hint("shuffle_hash"), "doc_a")
-          println("==== reprocand plan ====")
-          println(j1.queryExecution.executedPlan.toString.take(4000))
-          j1.count()
-        // bisect step: fake candidates + REAL docsets (posting-cache
-        // collect_list aggregate, registered) — does the width survive?
-        case "reprodocsets" =>
-          import org.apache.spark.sql.functions.{col, collect_list, sort_array}
-          val docs = graft.engine.Tables.documents(spark, dir)
-          val posts = graft.llm.Dedup.shinglePostings(docs, 3)
-            .transform(graft.engine.QueryCaches.registered)
-          val docsets = posts.groupBy(col("doc_id"))
-            .agg(sort_array(collect_list(col("h"))).as("hs"))
-            .transform(graft.engine.QueryCaches.registered)
-          val cand = spark.range(100000)
-            .select((col("id") % 1000).as("doc_a"), (col("id") % 997).as("doc_b"))
-            .distinct()
-          val j1 = cand.repartition(266, col("doc_a"))
-            .join(docsets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-              .hint("shuffle_hash"), "doc_a")
-          println("==== reprodocsets plan ====")
-          println(j1.queryExecution.executedPlan.toString.take(4000))
-          j1.count()
-        // sizing-path diagnostic: the exact numbers verifiedPairCounts'
-        // exchange width is computed from at this corpus scale
-        case "sizecheck" =>
-          val posts = graft.llm.Dedup.shinglePostings(
-              graft.engine.Tables.documents(spark, dir), 3)
-            .transform(graft.engine.QueryCaches.registered)
-          val n = posts.count()
-          val parts = graft.engine.Sizing.partsFor(
-            spark, n, graft.engine.Sizing.PostingRowsPerPartition)
-          println(s"[probe]   sizecheck posts=$n partsFor=$parts " +
-            s"defaultParallelism=${spark.sparkContext.defaultParallelism} " +
-            s"div=${n / graft.engine.Sizing.PostingRowsPerPartition} " +
-            s"min=${math.min(graft.engine.Sizing.MaxParts, n / graft.engine.Sizing.PostingRowsPerPartition)}")
-          n
-        // posting/prefix cardinalities + cache byte sizes + raw collision
-        // mass at this corpus scale — the sizing inputs the ngram dedup
-        // exchange works from, plus what actually sits on the heap
-        case "ngramstat" =>
-          import org.apache.spark.sql.functions.{col, count, lit, sum, expr}
-          val docs = graft.engine.Tables.documents(spark, dir)
-          val posts = graft.llm.Dedup.shinglePostings(docs, 3)
-            .transform(graft.engine.QueryCaches.registered)
-          val n = posts.count()
-          val mass = posts.groupBy(col("h")).agg(count(lit(1)).as("c"))
-            .agg(sum(expr("c * (c - 1) div 2"))).collect()(0).get(0)
-          spark.sparkContext.getRDDStorageInfo.foreach { i =>
-            println(s"[probe]   rdd ${i.name} mem=${i.memSize / 1048576}MB " +
-              s"disk=${i.diskSize / 1048576}MB parts=${i.numCachedPartitions}")
-          }
-          println(s"[probe]   posts=$n fullRawMass=$mass")
-          n
         // Prune-generation selectivities of the prefix path at this corpus
         // scale: raw prefix-collision rows, rows surviving the POSITIONAL
         // bound, deduped pairs before/after, and the final exact-pair
@@ -455,10 +224,6 @@ object ScaleProbe {
         // 12,784 positional-ok).
         case "prefixstat" => prefixStat(spark, dir, 4, 5)
         case s"prefixstat=${nm}x${dn}" => prefixStat(spark, dir, nm.toInt, dn.toInt)
-        case "ngramphase" => ngramPhase(spark, dir, 4, 5)
-        case s"ngramphase=${nm}x${dn}" => ngramPhase(spark, dir, nm.toInt, dn.toInt)
-        case "minhashphase" => minhashPhase(spark, dir, 4, 5)
-        case s"minhashphase=${nm}x${dn}" => minhashPhase(spark, dir, nm.toInt, dn.toInt)
         // initial physical plan of the minhash verify chain / the clusters
         // edge relation — diagnosis surface: where do broadcasts land?
         case "dupcplan" =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Round-close streaming-throughput yardstick (round-9 verdict #4): the
@@ -49,20 +48,12 @@ object StreamYardstick {
     val floorDir = args(0)
     val fullDir = args(1)
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Harness.cpus
     val canary = graft.engine.HostCanary.once(1)
-    val canaryMt = graft.engine.HostCanary.once(cpus.toInt)
+    val canaryMt = graft.engine.HostCanary.once(cpus)
     System.err.println(
       f"[yard] host canary pre: ${canary}%.2f s (1 thread), ${canaryMt}%.2f s ($cpus%s threads)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // (input rows, wall secs, output rows) for one drained AvailableNow run
     def stateful(dir: String): (Long, Double, Long) = {
@@ -118,7 +109,7 @@ object StreamYardstick {
       f"(per-run: ${slPerRun.map(r => f"$r%.0f").mkString("/")}, spread ${spread(slPerRun) * 100}%.1f%%)")
 
     val canaryPost = graft.engine.HostCanary.once(1)
-    val canaryMtPost = graft.engine.HostCanary.once(cpus.toInt)
+    val canaryMtPost = graft.engine.HostCanary.once(cpus)
     System.err.println(
       f"[yard] host canary post: ${canaryPost}%.2f s (1 thread), ${canaryMtPost}%.2f s ($cpus%s threads)")
     def walls(a: Array[(Long, Double, Long)]): String =

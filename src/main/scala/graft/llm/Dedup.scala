@@ -452,35 +452,6 @@ object Dedup {
     u * den >= (col("a.n_sh") + col("b.n_sh") - u) * num
   }
 
-  /** INDEX-prefix bound (PPJoin's probing/indexing prefix asymmetry; Xiao
-    * et al., WWW'08 §3) as a ROW predicate: the qualifying pair's SMALLER
-    * doc's witness shingle lies within rank n − ⌈2t/(1+t)·n⌉ + 1 (the
-    * "index prefix"), not just the standard (1−t)-prefix.
-    *
-    * MEASURED AND REJECTED AS A ROW FILTER (round 12): conjoined with
-    * [[positionalFeasible]] it pruned ZERO additional rows at sf0.1
-    * (shipRows == posRows, `ScaleProbe prefixstat`) — and that is a
-    * theorem, not corpus luck: positional feasibility
-    * u = 1 + min(sa−ra, sb−rb) ≥ t/(1+t)·(sa+sb) ≥ 2t/(1+t)·min(sa,sb)
-    * forces min(sa−ra, sb−rb) ≥ ⌈2t/(1+t)·min(sa,sb)⌉ − 1, which IS the
-    * index-prefix rank condition on the smaller side (sa−ra ≥ the min).
-    * The positional bound strictly subsumes this predicate row-wise. The
-    * asymmetry only pays when it shrinks the JOIN'S BUILD SIDE — fewer
-    * rows enumerated, not fewer rows kept — which is a join-topology
-    * change, not a filter (see the self-join in
-    * [[ngramJaccardPairsPrefixFromPosts]]). Kept for ScaleProbe's
-    * selectivity accounting only.
-    */
-  private[graft] def indexPrefixFeasible(num: Int, den: Int): org.apache.spark.sql.Column = {
-    // index-prefix length n − ⌈2t·n/(1+t)⌉ + 1 with t = num/den, in integer
-    // arithmetic: ⌈2·num·n / (num+den)⌉
-    def inIndexPrefix(side: String) =
-      col(s"$side.rank") <= col(s"$side.n_sh") -
-        expr(s"((2 * $num * $side.n_sh) + $num + $den - 1) div ($num + $den)") + 1
-    when(col("a.n_sh") <= col("b.n_sh"), inIndexPrefix("a"))
-      .otherwise(inIndexPrefix("b"))
-  }
-
   def ngramJaccardPairsPrefixFromPosts(posts: DataFrame, num: Int, den: Int,
                                        postsByH: Boolean = false): DataFrame = {
     val spark = posts.sparkSession
@@ -1023,7 +994,7 @@ object Dedup {
     // the same width law the docsets build was fixed for in r10).
     // Signatures: the per-row text kernel was the family's SECOND full
     // text scan (re-tokenize + re-shingle + one md5 per shingle — 36 s of
-    // the 227 s 1024× wall, `ScaleProbe minhashphase`), but `hs` already
+    // the 227 s 1024× wall), but `hs` already
     // holds exactly the kernel's deduped shingle hashes, so
     // [[graft.functions.MinhashSigFromHashesFP]] recomputes the identical
     // signature (FunctionsSpec proves bit-equality) in one pass over longs

@@ -73,29 +73,6 @@ object StreamParity {
     ss
   }
 
-  /** Measurement-only section timer, active under SPARK_GRAFT_STREAM_DEBUG:
-    * attributes a parity row's wall between query construction, streaming
-    * drain, and sink readback.
-    */
-  private def timed[A](label: String)(body: => A): A = {
-    if (!sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[stream-timed] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
-  /** Measurement-only (guide §1): with SPARK_GRAFT_STREAM_DEBUG set, dump
-    * each drained query's per-batch duration breakdown to stderr so the
-    * parity rows' wall can be attributed (trigger setup vs state commit vs
-    * sink) instead of guessed. Never on in a driver run.
-    */
-  private def debugProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(s"[stream-progress] ${p.json}"))
-
   /** Drain `stream` through a parquet streaming sink (append mode) and read
     * the committed files back. The read-back carries the stream's schema, so
     * an empty result stays a typed empty table instead of an inference error.
@@ -109,7 +86,7 @@ object StreamParity {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    timed("drain")(q.awaitTermination()); debugProgress(q)
+    q.awaitTermination()
     require(q.recentProgress.nonEmpty, "streaming query recorded no progress")
     spark.read.schema(stream.schema).parquet(out)
   }
@@ -138,7 +115,7 @@ object StreamParity {
         Files.createTempDirectory("graft-stream-ck").toString))
       .trigger(Trigger.AvailableNow())
       .start()
-    timed("drain")(q.awaitTermination()); debugProgress(q)
+    q.awaitTermination()
     require(q.recentProgress.nonEmpty, "streaming query recorded no progress")
     val outSchema = transform(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stream.schema)).schema
@@ -165,7 +142,7 @@ object StreamParity {
         Files.createTempDirectory("graft-stream-ck").toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    timed("drain")(q.awaitTermination()); debugProgress(q)
+    q.awaitTermination()
     require(q.recentProgress.nonEmpty, "streaming query recorded no progress")
     spark.read.schema(stream.schema.add("batch", "long"))
       .option("basePath", out).parquet(out).drop("batch")
@@ -789,7 +766,7 @@ object StreamParity {
         Files.createTempDirectory("graft-dlq-ck").toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    timed("drain")(q.awaitTermination()); debugProgress(q)
+    q.awaitTermination()
     require(q.recentProgress.nonEmpty, "streaming query recorded no progress")
     val good = ss.read.schema(parsed.schema.add("batch", "long"))
       .option("basePath", goodOut).parquet(goodOut).drop("batch")
@@ -1050,7 +1027,7 @@ object StreamParity {
           Files.createTempDirectory("graft-obs-ck").toString)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(); debugProgress(q)
+      q.awaitTermination()
       require(done.await(120, java.util.concurrent.TimeUnit.SECONDS),
         "listener never saw the query terminate")
     } finally ss.streams.removeListener(listener)

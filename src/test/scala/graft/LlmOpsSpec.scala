@@ -43,8 +43,9 @@ class LlmOpsSpec extends SparkSuite {
   }
 
   test("index-prefix bound is exact on size-asymmetric qualifying pairs") {
-    // The r12 index-prefix (short-prefix) bound prunes collision rows by
-    // the SMALLER doc's n − ⌈2t/(1+t)·n⌉ + 1 prefix. Exercise pairs whose
+    // The index-prefix (short-prefix) bound on the SMALLER doc's
+    // n − ⌈2t/(1+t)·n⌉ + 1 prefix is implied row-wise by the positional
+    // bound the prefix path applies (Dedup.positionalFeasible). Exercise pairs whose
     // sizes differ (the asymmetric case the fixture corpus under-covers):
     // a long doc quoting a short one near the Jaccard edge, plus chains of
     // overlapping windows over one token stream so qualifying overlaps

@@ -475,6 +475,8 @@ class PlansSpec extends SparkSuite {
     // the FIXED shape: verifiedPairCounts with the width injected — both
     // probe repartitions must survive at `width`, and the docsets cache's
     // own fill plan must carry the width-wide doc_id exchange.
+    val (savedMinPosts, savedParts) =
+      (graft.llm.Dedup.VerifyHashJoinMinPosts, graft.llm.Dedup.VerifyPartsOverride)
     graft.llm.Dedup.VerifyHashJoinMinPosts = 1L
     graft.llm.Dedup.VerifyPartsOverride = Some(width)
     try {
@@ -490,9 +492,9 @@ class PlansSpec extends SparkSuite {
         s"the docsets cache fill is not $width-wide:\n" + plan.take(3000))
       // and the whole wide-path operator still computes the right answer
       val expected = graft.llm.Dedup.VerifyPartsOverride.synchronized {
-        // reference run on the default path (threshold restored)
-        graft.llm.Dedup.VerifyHashJoinMinPosts = 8000000L
-        graft.llm.Dedup.VerifyPartsOverride = None
+        // reference run on the default path (gates restored)
+        graft.llm.Dedup.VerifyHashJoinMinPosts = savedMinPosts
+        graft.llm.Dedup.VerifyPartsOverride = savedParts
         val r = graft.llm.Dedup.minhashLshPairs(docs, 3, 64, 16, 7, 10)
           .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         graft.llm.Dedup.VerifyHashJoinMinPosts = 1L
@@ -503,8 +505,8 @@ class PlansSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected, s"wide-path output diverged: ${got.size} vs ${expected.size} pairs")
     } finally {
-      graft.llm.Dedup.VerifyHashJoinMinPosts = 8000000L
-      graft.llm.Dedup.VerifyPartsOverride = None
+      graft.llm.Dedup.VerifyHashJoinMinPosts = savedMinPosts
+      graft.llm.Dedup.VerifyPartsOverride = savedParts
       graft.engine.QueryCaches.releaseAll(spark, blocking = true)
       spark.catalog.clearCache()
     }

@@ -5,10 +5,13 @@ package graft
   */
 class QueriesSmokeSpec extends SparkSuite {
 
-  test("every oracle has a query; only sketch queries may omit an oracle") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.forall(_.startsWith("approx_")), s"unexpected oracle-less queries: $noOracle")
+  test("registry: unique names, one oracle per query, 256 queries") {
+    val names = SparkEntry.registry.map(_.name)
+    // toMap keeps the last of two same-named specs without a word
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(names.size == 256)
   }
 
   test("flagship entry returns rows") {
