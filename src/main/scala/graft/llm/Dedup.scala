@@ -894,7 +894,6 @@ object Dedup {
       // sized from the posting count as before.
       val parts = VerifyPartsOverride.getOrElse(graft.engine.Sizing.partsFor(
         posts.sparkSession, nPosts, graft.engine.Sizing.PostingRowsPerPartition))
-      System.err.println(s"[graft] verify-join width: posts=$nPosts parts=$parts")
       // The docsets cache must be FILLED at the sized width (round-10 law,
       // measured at 1024×): an InMemoryRelation's outputPartitioning is its
       // fill plan's, and EnsureRequirements prefers not to re-shuffle a

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
-import graft.engine.Tables
+import graft.engine.{LocalCheckpointFiles, Tables}
 import graft.llm.Dedup
 import graft.streaming.Streaming
 
@@ -33,44 +33,25 @@ import graft.streaming.Streaming
   */
 object StreamParity {
 
-  /** Child session for the streaming runs: same SparkContext, own SQLConf,
-    * shuffle partitions right-sized to the run. Streaming has no AQE to
+  /** Child session for the streaming runs on the default state store:
+    * same SparkContext, own SQLConf, shuffle partitions right-sized to the
+    * run and checkpoint files written without forking
+    * ([[graft.engine.LocalCheckpointFiles]]). Streaming has no AQE to
     * coalesce partitions, and every state partition costs a store commit
     * per micro-batch per stateful operator (a stream–stream join keeps 4
     * stores per partition) — at 32 partitions the commit overhead dwarfs
     * the actual join at test scale. 8 is the local parity size; production
     * sets this to the cluster's width before the FIRST run of a query
     * (state partitioning is fixed at checkpoint creation). The child
-    * session leaves the caller's conf untouched.
+    * session leaves the caller's conf untouched. The RocksDB rows
+    * (`transformWithState` requires it) use
+    * [[graft.streaming.Streaming.sessionForStreaming]] with the same 8.
     */
   private def streamSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set(LocalCheckpointFiles.ConfKey, LocalCheckpointFiles.ClassName)
     s
-  }
-
-  /** [[streamSession]] plus the RocksDB state-store provider
-    * (`transformWithState` requires it). CHANGELOG checkpointing
-    * (`...rocksdb.changelogCheckpointing.enabled`) was measured here and
-    * REJECTED at this scale (round 12, guide §1.2): the 8 RocksDB parity
-    * rows went 22.84 s → 24.45 s (min-of-2, like canaries) with the flag
-    * on, and the per-batch `commitTimeMs` did NOT drop (898–2032 ms vs
-    * 856–2700 ms summed) — the commit cost is the LOCAL RocksDB
-    * flush/checkpoint work, not the snapshot upload the changelog mode
-    * removes, so the flag only added a changelog write. On a cluster with
-    * large state and a remote checkpoint DFS the trade reverses (upload
-    * bytes dominate); that is a deployment conf, not a fixture win.
-    */
-  private def rocksdbSession(spark: SparkSession): SparkSession = {
-    val ss = streamSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // `...rocksdb.trackTotalNumberOfRows=false` (drops the point-GET each
-    // put pays for insert-vs-update accounting) was also measured and left
-    // at default: the 8-row subtotal moved 22.84 s → 22.91 s (min-of-2,
-    // like canaries) — noise, the per-record work is encoder/processor
-    // bound, not store-write bound, at this state size.
-    ss
   }
 
   /** Drain `stream` through a parquet streaming sink (append mode) and read
@@ -239,7 +220,7 @@ object StreamParity {
     * batch SQL total. State store: RocksDB, exercised for real.
     */
   def processorStreamParity(spark: SparkSession, dir: String): DataFrame = {
-    val ss = rocksdbSession(spark)
+    val ss = Streaming.sessionForStreaming(spark, 8)
     import ss.implicits._
     val typed = eventsStream(ss, dir).as[Streaming.Event]
     val changelog = typed.groupByKey(_.user_id)(
@@ -461,7 +442,7 @@ object StreamParity {
       implicit evEnc: org.apache.spark.sql.Encoder[Streaming.AsofEvent[K]],
       kEnc: org.apache.spark.sql.Encoder[K],
       mEnc: org.apache.spark.sql.Encoder[Streaming.AsofMatch[K]]): DataFrame = {
-    val ss = rocksdbSession(spark)
+    val ss = Streaming.sessionForStreaming(spark, 8)
     val maxTs = Tables.events(ss, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .agg(max(col("ts"))).head.getTimestamp(0)
@@ -687,7 +668,7 @@ object StreamParity {
     * hash-match.
     */
   def ivmStreamParity(spark: SparkSession, dir: String): DataFrame = {
-    val ss = rocksdbSession(spark)
+    val ss = Streaming.sessionForStreaming(spark, 8)
     import ss.implicits._
     val base = Tables.orders(ss, dir)
       .select("o_custkey", "o_orderkey", "o_orderstatus", "o_orderpriority",
@@ -813,7 +794,7 @@ object StreamParity {
     * primitive the reference's store API maps to.
     */
   def mapStateStreamParity(spark: SparkSession, dir: String): DataFrame = {
-    val ss = rocksdbSession(spark)
+    val ss = Streaming.sessionForStreaming(spark, 8)
     import ss.implicits._
     val typed = eventsStream(ss, dir).as[Streaming.Event]
     val changelog = typed.groupByKey(_.user_id)(
@@ -841,7 +822,7 @@ object StreamParity {
     * Completes the Value/Map/List state-primitive triad under the oracle.
     */
   def listStateStreamParity(spark: SparkSession, dir: String): DataFrame = {
-    val ss = rocksdbSession(spark)
+    val ss = Streaming.sessionForStreaming(spark, 8)
     import ss.implicits._
     val typed = eventsStream(ss, dir).as[Streaming.Event]
     val changelog = typed.groupByKey(_.user_id)(

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.engine.LocalCheckpointFiles
+
 /** Structured-Streaming twins of the reference's stateful topologies
   * (SURVEY.md §2.5): the same declarative plans as the batch queries, run
   * incrementally with watermarks and state stores. Batch and streaming share
@@ -615,24 +617,35 @@ object Streaming {
     graft.llm.Dedup.incrementalNeardupPairs(docs, corpusIndex, maxDist)
 
   /** Session configs streaming stateful ops need: RocksDB state store
-    * (transformWithState requires it; also W1 parity) and a right-sized
-    * shuffle-partition count — every state partition costs a store commit
-    * per micro-batch per stateful operator, so a local run at the 200
-    * default pays ~25× the commit overhead of the actual work. Returns a
-    * CHILD session (own SQLConf): the caller's session is untouched.
-    * Production sets `partitions` to the cluster's width before a query's
-    * FIRST run — state partitioning is fixed at checkpoint creation.
+    * (transformWithState requires it; also W1 parity), checkpoint files
+    * written without forking ([[graft.engine.LocalCheckpointFiles]]) and a
+    * right-sized shuffle-partition count — every state partition costs a
+    * store commit per micro-batch per stateful operator, so a local run at
+    * the 200 default pays ~25× the commit overhead of the actual work.
+    * Returns a CHILD session (own SQLConf): the caller's session is
+    * untouched. Production sets `partitions` to the cluster's width before
+    * a query's FIRST run — state partitioning is fixed at checkpoint
+    * creation.
     */
   def sessionForStreaming(spark: SparkSession, partitions: Int = 8): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Changelog checkpointing was measured (round 12) and left OFF: at
-    // fixture scale commit time is local RocksDB flush work, not snapshot
-    // upload, and the flag measured slightly slower. On a cluster whose
-    // checkpoint DFS is remote and state is large, enable
-    // `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
-    // .enabled` — upload bytes then dominate the commit.
+    // Commit time at fixture scale was Hadoop's local file system forking
+    // `chmod`/`stat`/`ls` for every checkpoint file (no native Hadoop
+    // library), not RocksDB flush work; LocalCheckpointFiles removes it.
+    s.conf.set(LocalCheckpointFiles.ConfKey, LocalCheckpointFiles.ClassName)
+    // Changelog checkpointing is left OFF. Round 12 rejected it on the 8
+    // RocksDB parity rows (22.84 s → 24.45 s), and on `stream_ingest` it
+    // gave p50 −12% and −24% on two seeds — both measured while every
+    // checkpoint file still forked, neither a reliable gain past the
+    // benchmark's 0.24 bound. On a cluster whose checkpoint DFS is remote
+    // and state is large, enable `spark.sql.streaming.stateStore.rocksdb
+    // .changelogCheckpointing.enabled` — upload bytes then dominate.
+    // `...rocksdb.trackTotalNumberOfRows=false` (drops the point-GET each
+    // put pays for insert-vs-update accounting) is left at default too: the
+    // 8 RocksDB parity rows moved 22.84 s → 22.91 s (round 12, min-of-2) —
+    // the per-record work is encoder/processor bound at this state size.
     s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     s
   }

@@ -49,6 +49,46 @@ class CheckpointRecoverySpec extends SparkSuite {
       "restarted query must resume prior state, not recount or drop it")
   }
 
+  test("a checkpoint started under Spark's default file manager resumes under graft's") {
+    import graft.engine.LocalCheckpointFiles
+    import graft.streaming.Streaming
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    val srcDir = Files.createTempDirectory("ckmgr-src").toString
+    val ckDir = Files.createTempDirectory("ckmgr-ck").toString
+    def write(rows: Seq[(Long, java.sql.Timestamp, Long, Double)]): Unit =
+      rows.toDF("event_id", "ts", "user_id", "value")
+        .coalesce(1).write.mode("append").parquet(srcDir)
+    def runOnce(ss: org.apache.spark.sql.SparkSession): Map[Long, Double] = {
+      val q = ss.readStream.schema(schema).parquet(srcDir)
+        .groupBy(col("user_id")).agg(sum(col("value")).as("total"))
+        .writeStream.format("memory").queryName("ckmgr").outputMode("complete")
+        .option("checkpointLocation", ckDir)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      ss.table("ckmgr").as[(Long, Double)].collect().toMap
+    }
+    def managerOf(ss: org.apache.spark.sql.SparkSession) =
+      CheckpointFileManager.create(new org.apache.hadoop.fs.Path(ckDir),
+        ss.sessionState.newHadoopConf()).getClass
+
+    // phase 1: Spark's default manager writes the logs and RocksDB state
+    val sparkDefault = Streaming.sessionForStreaming(spark, 4)
+    sparkDefault.conf.unset(LocalCheckpointFiles.ConfKey)
+    assert(managerOf(sparkDefault) != classOf[LocalCheckpointFiles])
+    write(Seq((1L, ts(1), 1L, 10.0), (2L, ts(2), 2L, 5.0)))
+    assert(runOnce(sparkDefault) == Map(1L -> 10.0, 2L -> 5.0))
+
+    // phase 2: new data, restarted from the SAME checkpoint under graft's
+    write(Seq((3L, ts(3), 1L, 2.0), (4L, ts(4), 3L, 7.0)))
+    val graftManager = Streaming.sessionForStreaming(spark, 4)
+    assert(managerOf(graftManager) == classOf[LocalCheckpointFiles])
+    val batch = spark.read.parquet(srcDir).groupBy("user_id").agg(sum("value"))
+      .as[(Long, Double)].collect().toMap
+    assert(runOnce(graftManager) == batch,
+      "resumed query must carry phase-1 state and converge to the batch answer")
+    assert(batch == Map(1L -> 12.0, 2L -> 5.0, 3L -> 7.0))
+  }
+
   test("Snapshot.pin upgrades to reliable checkpoint when a dir is configured") {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite session must start unconfigured")

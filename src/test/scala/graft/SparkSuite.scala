@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.LocalCheckpointFiles
+
 /** Shared local session per suite (one JVM-wide session under the hood). */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
@@ -19,6 +21,7 @@ object SparkSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(LocalCheckpointFiles.ConfKey, LocalCheckpointFiles.ClassName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
