@@ -21,7 +21,7 @@ object Plans {
     "ktable_latest",        // single-shuffle max_by reduction
     "revenue_by_segment",   // broadcast dims + partial aggregation
     "interval_join",        // key equi-join + time-range residual
-    "minhash_lsh",          // postings agg + band join + broadcast verify
+    "minhash_lsh",          // one docsets cache: band groupBy + shuffle-hash verify
     "ann_lsh",              // fused SignPlanesFP buckets + candidate verify
     "ngram_jaccard",        // PPJoin prefix-filtered candidate generation
     "tfidf",                // corpus count inlined as broadcast 1-row agg

@@ -91,7 +91,7 @@ object Profile {
         val t = once()
         drain() // wait for the measured pass's queued events
         val snap = stages.synchronized(stages.toVector)
-        println(f"\n=== $name%s measured ${t}%.2fs (warm ${warm}%.2fs) — " +
+        println(f"\n=== $name%s measured ${t}%.2fs (warm ${warm}%.2fs) - " +
           s"${snap.map(_.jobId).distinct.size} jobs, ${snap.size} stages ===")
         println(f"${"job"}%4s ${"stage"}%5s ${"ms"}%7s ${"tasks"}%5s " +
           f"${"in MB"}%8s ${"shR MB"}%8s ${"shW MB"}%8s ${"spill"}%6s  name")

@@ -25,10 +25,9 @@ object ScaleProbe {
     */
   private def prefixStat(spark: SparkSession, dir: String, num: Int, den: Int): Long = {
     import org.apache.spark.sql.functions.col
-    val posts = graft.llm.Dedup.shinglePostings(
-        graft.engine.Tables.documents(spark, dir), 3)
-      .transform(graft.engine.QueryCaches.registered)
-    val prefix = graft.llm.Dedup.rankedPrefix(posts, num, den)
+    val (posts, nPosts) = graft.engine.QueryCaches.registeredCounted(
+      graft.llm.Dedup.shinglePostings(graft.engine.Tables.documents(spark, dir), 3))
+    val prefix = graft.llm.Dedup.rankedPrefix(posts, nPosts, num, den)
       .transform(graft.engine.QueryCaches.registered)
     val coll = prefix.as("a").join(prefix.as("b"),
       col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))

@@ -249,7 +249,7 @@ case class SignPlanesFP(child: Expression, planes: Array[Array[Int]],
   * non-null elements — the shape `sort_array(collect_list(h))` produces
   * over distinct per-doc posting hashes): one two-pointer sweep, zero
   * allocation, fully codegen. This is the per-pair verification kernel of
-  * the dedup families' wide regime: n_common(a, b) = |A ∩ B| computed
+  * the verified dedup families: n_common(a, b) = |A ∩ B| computed
   * directly from the two docs' posting arrays, replacing a second
   * hash-join probe per posting row (and the exploded (pair, h) expansion
   * that probe required — see SCALE.md "Never SORT the quadratic stream").

@@ -27,10 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup on normalized text: lowercase, collapse non-alphanumerics.
-    * Output: one row per distinct normalized document with the kept id
-    * (lowest) and the copy count.
-    */
   /** md5 fingerprint of case/punctuation-normalized text — THE exact-dedup
     * identity, shared by [[exact]] and the per-source duplication report
     * (`dup_stats`) so the two can never disagree on what "duplicate" means.
@@ -38,6 +34,10 @@ object Dedup {
   def normFingerprint: org.apache.spark.sql.Column =
     md5(trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))
 
+  /** Exact dedup on normalized text: lowercase, collapse non-alphanumerics.
+    * Output: one row per distinct normalized document with the kept id
+    * (lowest) and the copy count.
+    */
   def exact(documents: DataFrame): DataFrame =
     documents
       .select(col("doc_id"), normFingerprint.as("fingerprint"))
@@ -100,16 +100,13 @@ object Dedup {
     * stays: doc-granular consumers (the PPJoin prefix bound) read it for
     * free, and it RLE-compresses to nothing in the columnar cache.
     *
-    * Persisted (registered): callers that keep this relation (the naive
-    * pair family's attach joins; the LSH path's above-ceiling piggyback
-    * prune) read it at least twice — once keyed as doc_a, once as doc_b —
-    * and an unpersisted subplan re-runs the groupBy over the postings
-    * cache per read. The relation is one 16-byte row per doc (~5 MB at
-    * 64×), so the cache is free and the second groupBy pass isn't
-    * (measured at sf0.1: ~0.2–0.5 s/query). Round 11 moved the WIDE verify
-    * path's size attach in-expression (size(hs) inside
-    * [[verifiedPairCounts]]) and the broadcast-regime prune to a lazy
-    * single-collect, so those paths no longer build this relation at all.
+    * Persisted (registered): the naive pair family's attach joins read it
+    * twice — once keyed as doc_a, once as doc_b — and an unpersisted
+    * subplan re-runs the groupBy over the postings cache per read. The
+    * relation is one 16-byte row per doc (~5 MB at 64×), so the cache is
+    * free and the second groupBy pass isn't (measured at sf0.1:
+    * ~0.2–0.5 s/query). The verified families ([[verifiedPairCounts]])
+    * read sizes off their docsets instead and never build this relation.
     */
   def shingleSizesFromPosts(posts: DataFrame): DataFrame =
     posts.groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh"))
@@ -197,8 +194,8 @@ object Dedup {
     * see the in-body comment for the exactness argument.
     */
   def ngramJaccardPairsPrefix(documents: DataFrame, n: Int, num: Int, den: Int): DataFrame = {
-    val (posts, byH) = prefixPostsCache(documents, n)
-    ngramJaccardPairsPrefixFromPosts(posts, num, den, postsByH = byH)
+    val (posts, nPosts, byH) = prefixPostsCache(documents, n)
+    ngramJaccardPairsPrefixFromPosts(posts, nPosts, num, den, postsByH = byH)
   }
 
   /** The prefix family's postings cache, with its partitioning chosen
@@ -220,26 +217,42 @@ object Dedup {
     * is output-identical, and the sample job is skipped entirely below
     * [[PrefixSampleMinDocs]] where the wide regime is out of reach —
     * fixture corpora never pay it.
+    *
+    * Returns (postings, exact posting count, filled h-partitioned): the
+    * count is the fill's own materializing count, and it is the one every
+    * width and regime decision of the family reads.
     */
-  private[graft] def prefixPostsCache(documents: DataFrame, n: Int): (DataFrame, Boolean) = {
+  private[graft] def prefixPostsCache(documents: DataFrame, n: Int): (DataFrame, Long, Boolean) = {
     val raw = shinglePostings(documents, n)
     val nDocs = documents.count()
     val estPosts =
       if (nDocs < PrefixSampleMinDocs) -1L
       else shinglePostings(documents.limit(PrefixSampleDocs), n).count() *
         nDocs / PrefixSampleDocs
-    if (estPosts < VerifyHashJoinMinPosts)
-      (raw.transform(graft.engine.QueryCaches.registered), false)
-    else {
-      val parts = graft.engine.Sizing.partsFor(
-        documents.sparkSession, estPosts, graft.engine.Sizing.PostingRowsPerPartition)
-      (raw.repartition(parts, col("h"))
-        .transform(graft.engine.QueryCaches.registered), true)
-    }
+    val byH = estPosts >= PrefixDocTableMinPosts
+    val fill =
+      if (!byH) raw
+      else raw.repartition(graft.engine.Sizing.partsFor(
+        documents.sparkSession, estPosts, graft.engine.Sizing.PostingRowsPerPartition), col("h"))
+    val (posts, nPosts) = graft.engine.QueryCaches.registeredCounted(fill)
+    (posts, nPosts, byH)
   }
 
+  /** Past this many posting rows the prefix family builds its prefix
+    * through the per-doc table ([[prefixDocTable]], h-partitioned postings
+    * fill, sized self-join exchange) instead of [[rankedPrefix]]'s
+    * rank window. ~8M rows ≈ the point where a posting-scale per-task
+    * sort starts spilling at 32 partitions.
+    *
+    * Kept as a gate because it was measured both ways: forcing the
+    * per-doc-table build at sf0.1 on 4 cores, `ngram_jaccard` ran 32
+    * jobs against 31 for the window build, and its steady-state measured
+    * passes took 2.81–3.38 s against 2.35–2.96 s (4 runs each). `var`
+    * for tests. */
+  private[graft] var PrefixDocTableMinPosts = 8000000L
+
   /** Doc-count floor below which [[prefixPostsCache]] skips the sizing
-    * sample: the wide regime needs ≥ [[VerifyHashJoinMinPosts]] postings,
+    * sample: the wide regime needs ≥ [[PrefixDocTableMinPosts]] postings,
     * which at any plausible shingles-per-doc is out of reach for corpora
     * this small — so fixture-scale queries never pay the sample job.
     * `var` for tests. */
@@ -249,14 +262,6 @@ object Dedup {
     * postings-per-doc estimate. */
   private[graft] val PrefixSampleDocs = 4096
 
-  /** The prefix-filtered join over an existing (persisted) postings frame.
-    * Currently only the documents-based wrapper above uses it; the seam
-    * exists for callers that already hold postings. NOTE: deriving MinHash
-    * signatures from a shared postings frame to save the kernel's second
-    * corpus scan was MEASURED SLOWER (the 64-min aggregation over ~1M
-    * posting rows costs ~3.7 s of stage time at sf0.1 vs ~0.6 s for the
-    * per-row kernel's own scan — see lshQualityEval) — don't re-wire that.
-    */
   /** The ranked PPJoin prefix relation of a postings frame: one
     * (doc_id, h, rank, n_sh) row per shingle whose FULL-ORDER rank (the
     * doc's canonical global-df-ascending, hash-ascending order) falls
@@ -310,10 +315,8 @@ object Dedup {
     * Below the break-even the AQE-planned shape stands (fixture corpora
     * broadcast the df side at runtime).
     */
-  private[graft] def rankedPrefix(posts: DataFrame, num: Int, den: Int): DataFrame = {
-    val spark = posts.sparkSession
-    val nPosts = posts.count() // cached + already materialized: a fast action
-    if (nPosts < VerifyHashJoinMinPosts) {
+  private[graft] def rankedPrefix(posts: DataFrame, nPosts: Long, num: Int, den: Int): DataFrame = {
+    if (nPosts < PrefixDocTableMinPosts) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
       // partition-only spec: same doc-keyed exchange and (doc_id)-prefix
@@ -332,7 +335,7 @@ object Dedup {
           (col("rank_nh") + col("n_sh") - col("n_nh")).as("rank"), col("n_sh"))
     } else {
       val postParts = graft.engine.Sizing.partsFor(
-        spark, nPosts, graft.engine.Sizing.PostingRowsPerPartition)
+        posts.sparkSession, nPosts, graft.engine.Sizing.PostingRowsPerPartition)
       prefixFromDocTable(prefixDocTable(posts, num, den, postParts))
     }
   }
@@ -452,19 +455,29 @@ object Dedup {
     u * den >= (col("a.n_sh") + col("b.n_sh") - u) * num
   }
 
-  def ngramJaccardPairsPrefixFromPosts(posts: DataFrame, num: Int, den: Int,
+  /** The prefix-filtered join over an existing (persisted) postings frame
+    * of exactly `nPosts` rows — the count [[prefixPostsCache]]'s fill
+    * already paid, which sizes every exchange and picks the prefix build
+    * ([[PrefixDocTableMinPosts]]). Currently only the documents-based
+    * wrapper above uses it; the seam exists for callers that already hold
+    * postings. NOTE: deriving MinHash signatures from a shared postings
+    * frame through the 64-min AGGREGATION ([[minhashSignaturesFromPosts]])
+    * was MEASURED SLOWER (~3.7 s of stage time over ~1M posting rows at
+    * sf0.1 vs ~0.6 s for the per-row kernel's own scan — see
+    * lshQualityEval) — don't re-wire that.
+    */
+  def ngramJaccardPairsPrefixFromPosts(posts: DataFrame, nPosts: Long, num: Int, den: Int,
                                        postsByH: Boolean = false): DataFrame = {
     val spark = posts.sparkSession
-    val nPosts = posts.count() // cached + already materialized: a fast action
+    val parts = graft.engine.Sizing.partsFor(
+      spark, nPosts, graft.engine.Sizing.PostingRowsPerPartition)
+    val wide = nPosts >= PrefixDocTableMinPosts
     // Wide regime (round 12): ONE per-doc table ([[prefixDocTable]]) backs
     // both the prefix relation and the verification docsets — the family's
     // second full doc-keyed exchange of the postings and the 266M-row rank
     // window are deleted (measured: prefix-fill 80 s + docsets 31 s at
     // 1024× under the r11 shape).
-    val fat =
-      if (nPosts < VerifyHashJoinMinPosts) None
-      else Some(prefixDocTable(posts, num, den, graft.engine.Sizing.partsFor(
-        spark, nPosts, graft.engine.Sizing.PostingRowsPerPartition), postsByH))
+    val fat = if (wide) Some(prefixDocTable(posts, num, den, parts, postsByH)) else None
     // Persisted with (rank, n_sh) kept: the POSITIONAL bound below consumes
     // both right at the self-join output, before any exchange. This widens
     // the prefix relation by two ints — a DELIBERATE, bounded exception to
@@ -475,8 +488,8 @@ object Dedup {
     // back to (doc_a, doc_b) before the first repartition, so the
     // quadratic stream itself stays 16 bytes/row (PlansSpec pins exactly
     // this split: one wide h-join allowed HERE, pair exchanges narrow).
-    val prefix = fat.map(prefixFromDocTable).getOrElse(rankedPrefix(posts, num, den))
-      .transform(graft.engine.QueryCaches.registered)
+    val (prefix, nPrefix) = graft.engine.QueryCaches.registeredCounted(
+      fat.map(prefixFromDocTable).getOrElse(rankedPrefix(posts, nPosts, num, den)))
     // Candidate-dedup width must scale with the DATA, not the core count:
     // the raw collision stream is Σ_h df_p(h)·(df_p(h)−1)/2 rows — at 64×
     // that is ~240M rows (5.7 GB) which, squeezed through the session's 32
@@ -502,22 +515,22 @@ object Dedup {
     // ~1M in-memory rows. No join-strategy hint — see the prefix-build
     // comment for why a forced hash build at this width is fatal.
     val selfJoinIn =
-      if (nPosts < VerifyHashJoinMinPosts) prefix
+      if (!wide) prefix
       else prefix.repartition(graft.engine.Sizing.partsFor(
-        spark, prefix.count(), graft.engine.Sizing.PostingRowsPerPartition), col("h"))
+        spark, nPrefix, graft.engine.Sizing.PostingRowsPerPartition), col("h"))
     val candidates = selfJoinIn.as("a")
       .join(selfJoinIn.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .filter(positionalFeasible(num, den))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .repartition(dedupParts, col("doc_a"), col("doc_b"))
       .distinct()
-    // The verification joins ship (doc, h) only; sizes come back WITH the
-    // verified counts ([[verifiedPairCounts]] — in-expression on the wide
-    // path, pair-granularity joins on the small path), so this path builds
-    // no sizes relation at all. Wide regime: the docsets are the per-doc
-    // table's own `hs`/`n_sh` columns — no separate docsets build.
-    verifiedPairCounts(candidates, posts,
-      docsetsIn = fat.map(_.select(col("doc_id"), col("hs"), col("n_sh"))))
+    // Verification ships (doc, h-array) rows and reads sizes off the
+    // docsets ([[verifiedPairCounts]]), so this path builds no sizes
+    // relation. Wide regime: the docsets are the per-doc table's own
+    // `hs`/`n_sh` columns — no separate docsets build.
+    val docsets = fat.map(_.select(col("doc_id"), col("hs"), col("n_sh")))
+      .getOrElse(docsetsOf(posts, parts)._1)
+    verifiedPairCounts(candidates.repartition(parts, col("doc_a")), docsets, parts)
       .filter(col("n_common") * den >= (col("size_a") + col("size_b") - col("n_common")) * num)
       .select("doc_a", "doc_b", "n_common", "size_a", "size_b")
   }
@@ -617,7 +630,9 @@ object Dedup {
     * no posting exchange at all; the signature is a pure row function).
     * Output-equal to [[minhashSignaturesFromPosts]] over
     * [[shinglePostings]] (FunctionsSpec proves it), which remains the form
-    * for pre-expanded postings (the weighted path).
+    * for pre-expanded postings (the weighted path). Callers that need only
+    * signatures read this; [[minhashLshPairs]] derives the identical
+    * signature off the docsets cache it verifies with.
     */
   def minhashSignatures(documents: DataFrame, n: Int, perms: Int): DataFrame =
     spread(documents)
@@ -639,16 +654,6 @@ object Dedup {
       .select(col("doc_id"), array((0 until perms).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** MinHash + LSH banded near-dup join, exact-verified. `bands` bands of
-    * `perms/bands` rows each; docs sharing any band key become candidates,
-    * candidates are verified with exact n-gram Jaccard ≥ num/den via a
-    * broadcast join back to the postings — only candidate pairs are ever
-    * materialized. At scale the band shuffle is O(docs × bands) short keys.
-    */
-  /** LSH banding over MinHash signatures: split each `perms`-long signature
-    * into `bands` bands, emit (doc_a < doc_b) for every pair sharing any
-    * band key. Shared by the set and weighted MinHash joins.
-    */
   /** (doc, band, key) relation of the banded signatures — the LSH blocking
     * key itself, exposed so diagnostics can profile bucket sizes (the
     * SCALE.md lesson: a banded join is only as scalable as its blocking
@@ -669,7 +674,10 @@ object Dedup {
       .toDF("doc_id", "band", "key")
   }
 
-  /** Raw pre-verification band-collision pairs — public so evaluation
+  /** LSH banding over MinHash signatures: split each `perms`-long signature
+    * into `bands` bands, emit (doc_a < doc_b) for every pair sharing any
+    * band key. Shared by the set and weighted MinHash joins. These raw
+    * pre-verification band-collision pairs are public so evaluation
     * harnesses (`lsh_quality_eval`) can measure candidate precision/recall
     * against exact ground truth.
     */
@@ -684,8 +692,8 @@ object Dedup {
     // on ReusedExchange, which stops firing the moment the band relation's
     // child is a cache scan (AQE wraps each cache scan in its own
     // TableCacheQueryStage; the round-11 broadcast-reuse finding), exactly
-    // what the wide regime's signatures-off-the-docsets-cache rewrite
-    // made it. The groupBy form has no reuse to lose: one exchange WRITE,
+    // what [[minhashLshPairs]]' signatures-off-the-docsets-cache source
+    // makes it. The groupBy form has no reuse to lose: one exchange WRITE,
     // one READ, a hash aggregation (no sorts at all), and per-bucket state
     // bounded by bucket size — the same shape [[docsetsOf]] already runs
     // at 1024×/4096×. Pair emission streams (posexplode + slice explode),
@@ -712,26 +720,6 @@ object Dedup {
           size(col("ds")) - col("i") - lit(1))).as("doc_b"))
       .distinct()
   }
-
-  /** Past this many posting rows the candidate verification switches from
-    * the AQE-planned shape (broadcast-friendly for fixture-sized corpora)
-    * to the sort-free SHUFFLE_HASH shape below. ~8M rows ≈ the point where
-    * the expansion's per-task merge sort starts spilling at 32 partitions.
-    */
-  private[graft] var VerifyHashJoinMinPosts = 8000000L
-
-  /** Test hook: forces the verify-join exchange width. At fixture scale
-    * [[graft.engine.Sizing.partsFor]] always returns the core count, which
-    * is indistinguishable from the session default — the cache-width law
-    * (see [[verifiedPairCounts]]) is only observable in a spec with an
-    * injected width. Production callers never set this.
-    */
-  private[graft] var VerifyPartsOverride: Option[Int] = None
-
-  /** Test hook for [[lengthCompatible]]'s regime switch — at fixture scale
-    * every corpus is far below the broadcast ceiling, so the piggyback
-    * branch is only reachable in a spec that lowers this. */
-  private[graft] var SizesBroadcastMax: Long = graft.engine.Sizing.SizesBroadcastMaxDocs
 
   /** PPJoin length filter over a candidate-pair stream: drops pairs whose
     * shingle-set sizes make the Jaccard threshold UNREACHABLE before any
@@ -769,7 +757,7 @@ object Dedup {
     // fast action over the registered cache
     val nDocs = nDocsKnown.getOrElse(sizes.count())
     val outCols = cands.columns.map(col).toIndexedSeq
-    if (nDocs <= SizesBroadcastMax) {
+    if (nDocs <= graft.engine.Sizing.SizesBroadcastMaxDocs) {
       // ONE broadcast of the sizes relation, joined twice under join-time
       // aliases. Two subtleties, both probed on Spark 4.1 (round 11):
       // (1) the old per-join endpoint-rename projections gave the planner
@@ -781,7 +769,7 @@ object Dedup {
       // canonicalizing equal, so the stage cache never reuses. A
       // LocalRelation child canonicalizes equal, so the plan carries ONE
       // BroadcastExchange + one ReusedExchange (PlansSpec pins it). The
-      // collect is bounded by the regime guard (≤ SizesBroadcastMax rows)
+      // collect is bounded by the regime guard (≤ SizesBroadcastMaxDocs rows)
       // and is the same driver materialization BroadcastExchange itself
       // performs (executeCollect + driver-side build) — done once instead
       // of twice, halving build work and resident broadcast footprint at
@@ -823,203 +811,122 @@ object Dedup {
     }
   }
 
-  /** Per-pair shared-shingle counts for a candidate set: the verification
-    * core shared by the banded ([[minhashLshPairs]]) and prefix
-    * ([[ngramJaccardPairsPrefixFromPosts]]) families.
+  /** The per-doc sorted posting-array relation the verified families read:
+    * (doc_id, hs, n_sh), `hs` the doc's h-ascending distinct shingle
+    * hashes and `n_sh` = size(hs) (postings carry one row per DISTINCT
+    * shingle, so the array length IS the doc's shingle count). Returned
+    * with its row count, which its own materializing fill already paid.
     *
-    * The scale law here (measured, 64×/256×): the candidates ⋈ posts
-    * expansion is the QUADRATIC stream of the query (~380M rows at 64×,
-    * ~1.5B at 256×) and must only ever be STREAMED, never sorted — the
-    * default sort-merge plan sorted it through 32 fixed partitions, which
-    * cost 26.6 GB of sort spill at 64× (profiled: 54 s of an 80 s query)
-    * and at 256× killed the JVM outright: hundreds of spill files per task
-    * whose merge-phase reader buffers (`UnsafeSorterSpillReader`, one
-    * read-ahead buffer each) exhausted the 8 GiB heap. So past
-    * [[VerifyHashJoinMinPosts]] both verify joins are SHUFFLE_HASH with the
-    * LINEAR side (posts) as build — the expansion streams through the
-    * probe with zero sort state — and the exchanges are sized from the
-    * measured posting count so the per-task build map stays ~1M rows at
-    * any corpus scale. Below the threshold the AQE-planned shape stands:
-    * on fixture-sized corpora AQE broadcasts the small side at runtime,
-    * which a compile-time hint would forfeit.
+    * The cache must be FILLED at the sized width (round-10 law, measured
+    * at 1024×): an InMemoryRelation's outputPartitioning is its fill
+    * plan's, and EnsureRequirements prefers not to re-shuffle a child that
+    * already satisfies the join's distribution — so a cache filled through
+    * the session-default 32-partition aggregation exchange PINS both
+    * verify joins to 32, silently rewriting the mass-sized
+    * repartition(parts) on the probe side back to the cache's width. At
+    * 1024× (5.1M docsets rows ≈ 4.4 GB of sorted-hash arrays) the 32-way
+    * build maps were ~137 MB per task × 32 concurrent — past the unified
+    * pool, and the build died with UNABLE_TO_ACQUIRE_MEMORY.
+    * Repartitioning the postings by doc_id BEFORE the aggregation makes
+    * the fill plan itself parts-wide (the groupBy's distribution is then
+    * already satisfied — no extra exchange), so cache, probe exchanges,
+    * and join all agree on the data-sized width.
     */
-  /** The per-doc sorted posting-array relation of the wide verify path,
-    * cached AT the sized width (the r10 cache-width law — see the in-body
-    * comment at the use site). Factored so callers that need doc-granular
-    * facts at a wide tier (the LSH prune's sizes) can derive them off THIS
-    * cache instead of running their own aggregation: [[graft.engine
-    * .QueryCaches.registered]] persists by canonicalized plan, so the
-    * family still fills one cache however many call sites name it.
-    */
-  private[graft] def docsetsOf(posts: DataFrame, parts: Int): DataFrame =
-    posts.repartition(parts, col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("h"))).as("hs"))
-      .transform(graft.engine.QueryCaches.registered)
-
-  private def verifiedPairCounts(candidates: DataFrame, posts: DataFrame,
-                                 candsDocAWidth: Option[Int] = None,
-                                 docsetsIn: Option[DataFrame] = None): DataFrame = {
-    val nPosts = posts.count() // cached + already materialized: a fast action
-    if (nPosts < VerifyHashJoinMinPosts) {
-      // sizes re-attach at pair granularity (post-aggregation, tiny —
-      // AQE-broadcastable; see shingleSizesFromPosts for the 64× story)
-      val sizes = shingleSizesFromPosts(posts)
-      val pa = posts.select(col("doc_id").as("doc_a"), col("h"))
-      val pb = posts.select(col("doc_id").as("pb"), col("h").as("h_b"))
-      candidates
-        .join(pa, "doc_a")
-        .join(pb, col("doc_b") === col("pb") && col("h") === col("h_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("size_a")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("size_b")), "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("n_common"),
-          col("size_a"), col("size_b"))
-    } else {
-      // Wide regime, round-9 second iteration: even streamed (never
-      // sorted), the EXPLODED expansion — one (doc_a, doc_b, h) row per
-      // posting of doc_a per pair — materialized 35 GB through the
-      // exchange between the two verify joins at 256× (profiled: 142 s of
-      // a 246 s query, 94 s of it pure shuffle WRITE). Each pair's
-      // verification payload is ~n_sh rows ≈ 2.4 KB; the doc's SORTED
-      // posting array ships the same information once per pair at
-      // ~0.8 KB, and the shared-count becomes one sorted two-pointer
-      // sweep per pair instead of a second hash-join probe per posting.
-      // So: build (doc → sorted h array) ONCE from the posting cache
-      // (doc-granularity — 1.28M rows ≈ 1 GB at 256×, the linear side),
-      // hash-join it to the candidates on each endpoint, count the
-      // intersection in-expression. Only the first join's output carries
-      // an array through an exchange (~12 GB at 256× vs 35). Exchanges
-      // sized from the posting count as before.
-      val parts = VerifyPartsOverride.getOrElse(graft.engine.Sizing.partsFor(
-        posts.sparkSession, nPosts, graft.engine.Sizing.PostingRowsPerPartition))
-      // The docsets cache must be FILLED at the sized width (round-10 law,
-      // measured at 1024×): an InMemoryRelation's outputPartitioning is its
-      // fill plan's, and EnsureRequirements prefers not to re-shuffle a
-      // child that already satisfies the join's distribution — so a cache
-      // filled through the session-default 32-partition aggregation exchange
-      // PINS both verify joins to 32, silently rewriting the mass-sized
-      // repartition(parts) on the probe side back to the cache's width.
-      // At 1024× (5.1M docsets rows ≈ 4.4 GB of sorted-hash arrays) the
-      // 32-way build maps were ~137 MB per task × 32 concurrent — past the
-      // unified pool, and the build died with UNABLE_TO_ACQUIRE_MEMORY.
-      // Repartitioning the postings by doc_id BEFORE the aggregation makes
-      // the fill plan itself parts-wide (the groupBy's distribution is then
-      // already satisfied — no extra exchange), so cache, probe exchanges,
-      // and join all agree on the data-sized width.
-      // Round 12: the prefix family passes its per-doc table's (hs, n_sh)
-      // as `docsetsIn` — those `hs` arrays EXCLUDE hapax shingles (exact
-      // for the intersection: df = 1 shingles are never common) and carry
-      // the TRUE doc size as an explicit column; no separate docsets build
-      // runs. Callers without the table (the MinHash family — its
-      // signatures need the full-h arrays) keep the `docsetsOf` cache,
-      // where sizes stay in-expression: postings carry one row per
-      // DISTINCT shingle, so size(hs) IS the doc's n_sh (round 11).
-      val docsets = docsetsIn.getOrElse(docsetsOf(posts, parts))
-      val hasSize = docsetsIn.isDefined
-      def side(ep: String) = {
-        val cols = Seq(col("doc_id").as(ep), col("hs").as(s"hs_$ep")) ++
-          (if (hasSize) Seq(col("n_sh").as(s"sz_$ep")) else Nil)
-        docsets.select(cols: _*)
-      }
-      def sizeOf(ep: String) =
-        if (hasSize) col(s"sz_$ep") else size(col(s"hs_$ep")).cast("long")
-      // A caller that already left the candidate stream hash-partitioned by
-      // doc_a at THIS width (the piggyback length prune's doc_a-last join
-      // order does exactly that) skips the first exchange: Catalyst does
-      // not elide a user repartition even when the child's partitioning
-      // already satisfies it (round-10 advice — one redundant full exchange
-      // of the candidate stream on exactly the >2M-doc tiers this branch
-      // exists for).
-      val candsByA =
-        if (candsDocAWidth.contains(parts)) candidates
-        else candidates.repartition(parts, col("doc_a"))
-      candsByA
-        .join(side("doc_a").hint("shuffle_hash"), "doc_a")
-        .repartition(parts, col("doc_b"))
-        .join(side("doc_b").hint("shuffle_hash"), "doc_b")
-        // sizes IN-EXPRESSION (round 11) or off the per-doc table's n_sh
-        // column (round 12): two codegen'd reads on rows the joins already
-        // hold — the old shape paid a sizes-relation fill (one more full
-        // scan of the postings cache — GBs of disk read at 1024×, where
-        // the cache spills) plus two pair-granularity joins per query. The
-        // arrays are dropped in this same projection, so nothing wide
-        // rides an exchange (the width pin still holds).
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.VectorFunctions.graftSortedIntersectCount(
-            col("hs_doc_a"), col("hs_doc_b")).as("n_common"),
-          sizeOf("doc_a").as("size_a"),
-          sizeOf("doc_b").as("size_b"))
-        .filter(col("n_common") > 0)
-    }
+  private[graft] def docsetsOf(posts: DataFrame, parts: Int): (DataFrame, Long) = {
+    val (docsets, nDocs) = graft.engine.QueryCaches.registeredCounted(
+      posts.repartition(parts, col("doc_id"))
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(col("h"))).as("hs")))
+    (docsets.select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("n_sh")), nDocs)
   }
 
+  /** Per-pair shared-shingle counts for a candidate set: the verification
+    * core shared by the banded ([[minhashLshPairs]]) and prefix
+    * ([[ngramJaccardPairsPrefixFromPosts]]) families, one shape at every
+    * scale. `candsByA` must arrive hash-partitioned by doc_a at `parts`
+    * (the caller either repartitions or already left it so — the
+    * piggyback length prune does); `docsets` is (doc_id, hs, n_sh) at the
+    * same width ([[docsetsOf]], or the prefix family's per-doc table,
+    * whose `hs` excludes hapax shingles — exact for the intersection,
+    * since a df = 1 shingle is never common — and whose `n_sh` is the
+    * doc's TRUE size).
+    *
+    * The scale law (measured, 64×/256×): the candidates ⋈ postings
+    * expansion is the QUADRATIC stream of the query (~380M rows at 64×,
+    * ~1.5B at 256×) and must only ever be STREAMED, never sorted — a
+    * sort-merge plan through 32 fixed partitions cost 26.6 GB of sort
+    * spill at 64× (profiled: 54 s of an 80 s query) and at 256× killed the
+    * JVM outright (spill-reader read-ahead buffers exhausted the 8 GiB
+    * heap). Even streamed, an EXPLODED expansion — one (doc_a, doc_b, h)
+    * row per posting of doc_a per pair — materialized 35 GB between the
+    * two verify joins at 256× (142 s of a 246 s query). So each endpoint
+    * joins the doc's SORTED posting array (~0.8 KB per pair instead of
+    * ~2.4 KB of rows), both joins are SHUFFLE_HASH with the linear side
+    * (docsets) as build, the shared count is one two-pointer sweep per
+    * pair ([[graft.functions.VectorFunctions.graftSortedIntersectCount]]),
+    * and the sizes are read off the docsets rows the joins already hold.
+    * Only the first join's output carries an array through an exchange
+    * (~12 GB at 256× vs 35), and the arrays are dropped in the final
+    * projection. `parts` (sized from the posting count by the caller)
+    * keeps the per-task build map ~1M rows at any corpus scale.
+    */
+  private[graft] def verifiedPairCounts(candsByA: DataFrame, docsets: DataFrame,
+                                        parts: Int): DataFrame = {
+    def side(ep: String) = docsets.select(
+      col("doc_id").as(ep), col("hs").as(s"hs_$ep"), col("n_sh").as(s"sz_$ep"))
+    candsByA
+      .join(side("doc_a").hint("shuffle_hash"), "doc_a")
+      .repartition(parts, col("doc_b"))
+      .join(side("doc_b").hint("shuffle_hash"), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        graft.functions.VectorFunctions.graftSortedIntersectCount(
+          col("hs_doc_a"), col("hs_doc_b")).as("n_common"),
+        col("sz_doc_a").as("size_a"), col("sz_doc_b").as("size_b"))
+      .filter(col("n_common") > 0)
+  }
+
+  /** MinHash + LSH banded near-dup join, exact-verified. `bands` bands of
+    * `perms/bands` rows each; docs sharing any band key become candidates,
+    * and candidates are verified with exact n-gram Jaccard ≥ num/den
+    * against the docsets ([[verifiedPairCounts]]) — only candidate pairs
+    * are ever materialized. At scale the band shuffle is O(docs × bands)
+    * short keys.
+    */
   def minhashLshPairs(documents: DataFrame, n: Int, perms: Int, bands: Int,
                       num: Int, den: Int): DataFrame = {
-    // postings are persisted for candidate VERIFICATION only — signatures
-    // come from the per-row kernel (fixture regime) or off the docsets
-    // cache (wide regime, below) and never add an exchange of their own
-    val posts = shinglePostings(documents, n)
-      .transform(graft.engine.QueryCaches.registered)
+    // ONE docsets cache backs the family at every scale: signatures, sizes
+    // and verification all read it. The postings cache feeds only its
+    // fill, and its materializing count sizes every exchange.
+    val (posts, nPosts) = graft.engine.QueryCaches.registeredCounted(
+      shinglePostings(documents, n))
+    val parts = graft.engine.Sizing.partsFor(documents.sparkSession,
+      nPosts, graft.engine.Sizing.PostingRowsPerPartition)
+    val (docsets, nDocs) = docsetsOf(posts, parts)
+    // Signatures: `hs` holds exactly the text kernel's deduped shingle
+    // hashes, so [[graft.functions.MinhashSigFromHashesFP]] recomputes the
+    // identical signature (FunctionsSpec proves bit-equality) in one pass
+    // over longs the family already materialized — the per-row text kernel
+    // would be a SECOND full text scan (re-tokenize + re-shingle + one md5
+    // per shingle — 36 s of the 227 s 1024× wall).
+    val sigs = docsets.select(col("doc_id"),
+      graft.functions.TextFunctions.graftMinhashSigFromHashes(col("hs"), perms).as("sig"))
     // Band collisions skew similar, but size-INCOMPATIBLE collisions still
     // occur (a band of minima can agree across very different set sizes);
     // the length bound drops them before the array-carrying verify
     // exchanges — same exactness argument as the prefix path
-    // ([[lengthCompatible]]). Piggyback width = the verify width, so in
-    // that regime the prune joins and the verify joins agree end to end —
-    // including the exchange: the prune's doc_a-last join order leaves the
-    // candidates doc_a-partitioned at `parts`, which verifiedPairCounts is
-    // told about so its first exchange is skipped, not repeated.
-    //
-    // Sizes regime (round 11, the bag family's pattern): below the
-    // broadcast ceiling the prune is the ONLY sizes consumer left (the
-    // final attach moved in-expression into verifiedPairCounts), so the
-    // relation is passed LAZY and the prune's single broadcast collect is
-    // its one evaluation — no registered fill, no separate count job.
-    // Above the ceiling the registered cache stands: the piggyback prune
-    // repartitions the sizes OVER their cache (the cache-width law) and
-    // materialized stats are load-bearing for those wide joins. The regime
-    // probe is the documents row count (≥ distinct doc_ids, cheap).
-    val parts = graft.engine.Sizing.partsFor(documents.sparkSession,
-      posts.count(), graft.engine.Sizing.PostingRowsPerPartition)
-    val nDocs = documents.count()
-    // Wide regime: BOTH the sizes and the SIGNATURES come OFF the docsets
-    // cache, which is built at the sized width and read twice more by the
-    // verify joins anyway. Sizes: size(hs) == n_sh (one posting row per
-    // distinct shingle) — running a separate groupBy at the cache's
-    // 32-wide fill partitioning held data-linear per-task hash-agg state
-    // and died AGGREGATE_OUT_OF_MEMORY at 4096× (20.5M docs / 32 tasks;
-    // the same width law the docsets build was fixed for in r10).
-    // Signatures: the per-row text kernel was the family's SECOND full
-    // text scan (re-tokenize + re-shingle + one md5 per shingle — 36 s of
-    // the 227 s 1024× wall), but `hs` already
-    // holds exactly the kernel's deduped shingle hashes, so
-    // [[graft.functions.MinhashSigFromHashesFP]] recomputes the identical
-    // signature (FunctionsSpec proves bit-equality) in one pass over longs
-    // the family already paid to materialize. The docsets plan here and
-    // the one inside verifiedPairCounts canonicalize equal, so the cache
-    // still fills exactly once. Fixture regime keeps the text kernel: no
-    // docsets cache exists before verification there, and forcing one
-    // would add the doc_id exchange the kernel exists to avoid.
-    val docsetsWide =
-      if (nDocs <= SizesBroadcastMax) None else Some(docsetsOf(posts, parts))
-    val sigs = docsetsWide.fold(minhashSignatures(documents, n, perms))(ds =>
-      ds.select(col("doc_id"),
-        graft.functions.TextFunctions.graftMinhashSigFromHashes(
-          col("hs"), perms).as("sig")))
-    val sizes = docsetsWide.fold(
-      posts.groupBy(col("doc_id")).agg(max(col("n_sh")).as("n_sh")))(ds =>
-      ds.select(col("doc_id"), size(col("hs")).cast("long").as("n_sh")))
+    // ([[lengthCompatible]]). Its regime is picked by `nDocs`, the exact
+    // row count of the sizes relation: below the broadcast ceiling the
+    // prune collects the sizes once; above it the prune joins go keyed at
+    // `parts` (the band bucketing too), and their doc_a-last join order
+    // leaves the candidates doc_a-partitioned at `parts`, so verification
+    // skips its first exchange instead of repeating it (Catalyst does not
+    // elide a user repartition whose child already satisfies it).
+    val wide = nDocs > graft.engine.Sizing.SizesBroadcastMaxDocs
     val candidates = lengthCompatible(
-      bandCandidates(sigs, perms, bands,
-        parts = if (nDocs > SizesBroadcastMax) Some(parts) else None),
-      sizes, num, den, parts, Some(nDocs))
-    // The verification joins ship (doc, h) only; sizes come back WITH the
-    // verified counts ([[verifiedPairCounts]] — in-expression on the wide
-    // path, pair-granularity joins on the small path).
-    verifiedPairCounts(candidates, posts,
-      candsDocAWidth = if (nDocs > SizesBroadcastMax) Some(parts) else None)
+      bandCandidates(sigs, perms, bands, parts = if (wide) Some(parts) else None),
+      docsets.select(col("doc_id"), col("n_sh")), num, den, parts, Some(nDocs))
+    val candsByA = if (wide) candidates else candidates.repartition(parts, col("doc_a"))
+    verifiedPairCounts(candsByA, docsets, parts)
       .filter(col("n_common") * den >= (col("size_a") + col("size_b") - col("n_common")) * num)
       .select("doc_a", "doc_b", "n_common", "size_a", "size_b")
   }
@@ -1040,14 +947,6 @@ object Dedup {
       .select(col("doc_id"), PortableHash.md5Long(col("sc.s")).as("h"),
         col("sc.cnt").as("cnt"))
 
-  /** Exact weighted (bag) Jaccard pairs:
-    * J_w = Σ min(cnt_a, cnt_b) / Σ max(cnt_a, cnt_b) ≥ num/den, in pure
-    * integer arithmetic (Σ max = w_a + w_b − Σ min). The same
-    * inverted-index topology as [[ngramJaccardPairs]] — postings of
-    * (doc, hash, count) shuffle, never documents — but duplicate-heavy
-    * docs no longer inflate toward 1.0: a doc that is another's text
-    * repeated k times scores 1/k, not ~1.
-    */
   /** Weighted sizes for the bag family, regime-split (round 11, reclaiming
     * the round-10 bag_jaccard regression): below the broadcast ceiling the
     * per-doc weight relation is evaluated ONCE and collected into a
@@ -1068,7 +967,7 @@ object Dedup {
     * relation; both regimes are output-identical (spec-pinned).
     */
   private def weightedSizesRegime(documents: DataFrame, bag: DataFrame): (DataFrame, Option[Long]) = {
-    if (documents.count() <= SizesBroadcastMax) {
+    if (documents.count() <= graft.engine.Sizing.SizesBroadcastMaxDocs) {
       val proj = bag.groupBy(col("doc_id")).agg(sum(col("cnt")).as("w_sh"))
       val rows = proj.collect()
       (documents.sparkSession.createDataFrame(
@@ -1076,6 +975,14 @@ object Dedup {
     } else (weightedSizesFromBag(bag), None)
   }
 
+  /** Exact weighted (bag) Jaccard pairs:
+    * J_w = Σ min(cnt_a, cnt_b) / Σ max(cnt_a, cnt_b) ≥ num/den, in pure
+    * integer arithmetic (Σ max = w_a + w_b − Σ min). The same
+    * inverted-index topology as [[ngramJaccardPairs]] — postings of
+    * (doc, hash, count) shuffle, never documents — but duplicate-heavy
+    * docs no longer inflate toward 1.0: a doc that is another's text
+    * repeated k times scores 1/k, not ~1.
+    */
   def bagJaccardPairs(documents: DataFrame, n: Int, num: Int, den: Int): DataFrame = {
     val bag = bagPostings(documents, n)
       .transform(graft.engine.QueryCaches.registered)
@@ -1128,14 +1035,13 @@ object Dedup {
     // signatures come from the per-row kernel (expansion processed
     // inline), so the signature path pays zero exchanges, like the
     // unweighted family
-    val bag = bagPostings(documents, n)
-      .transform(graft.engine.QueryCaches.registered)
+    val (bag, nBag) = graft.engine.QueryCaches.registeredCounted(bagPostings(documents, n))
     val sigs = spread(documents)
       .select(col("doc_id"),
         graft.functions.TextFunctions.graftMinhashSigWeighted(col("text"), n, perms).as("sig"))
       .filter(size(col("sig")) > 0)
     val (wsizes, localN) = weightedSizesRegime(documents, bag)
-    val wParts = graft.engine.Sizing.partsFor(documents.sparkSession, bag.count(),
+    val wParts = graft.engine.Sizing.partsFor(documents.sparkSession, nBag,
       graft.engine.Sizing.PostingRowsPerPartition)
     // same weighted length bound as [[bagJaccardPairs]], applied to the
     // (deduped) band collisions before the posting-granular verify joins;
@@ -1146,7 +1052,7 @@ object Dedup {
         parts = if (localN.isEmpty) Some(wParts) else None),
       wsizes.select(col("doc_id"), col("w_sh").as("n_sh")), num, den,
       wParts,
-      localN.orElse(Some(SizesBroadcastMax + 1)))
+      localN.orElse(Some(graft.engine.Sizing.SizesBroadcastMaxDocs + 1)))
     // AQE picks the verify-join strategy from the candidate set's runtime size
     val common = candidates
       .join(bag.select(col("doc_id").as("doc_a"), col("h"), col("cnt").as("cnt_a")), "doc_a")

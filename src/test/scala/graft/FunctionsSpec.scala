@@ -155,13 +155,13 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("from-hashes MinHash signature over docsets equals the text kernel") {
-    // the wide regime's signature source (Dedup.minhashLshPairs derives
-    // sigs off the docsets cache): bit-equality with the per-row kernel
+    // minhashLshPairs' signature source (it derives sigs off the docsets
+    // cache): bit-equality with the per-row kernel
     import graft.llm.Dedup
     for (sf <- Seq("sf0.001", "sf0.01")) {
       val docs = spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
       val posts = Dedup.shinglePostings(docs, 3)
-      val fromHs = Dedup.docsetsOf(posts, 4)
+      val fromHs = Dedup.docsetsOf(posts, 4)._1
         .select(col("doc_id"),
           graft.functions.TextFunctions.graftMinhashSigFromHashes(col("hs"), 64)
             .as("hs_sig"))
@@ -315,26 +315,25 @@ class FunctionsSpec extends SparkSuite {
     assert(fenced, s"codegen fallback:\n$plan")
   }
 
-  test("dedup verify wide regime (array intersection) equals the AQE-planned shape") {
-    // force the wide branch at fixture scale, then compare the full pair
-    // output of both families against the default branch
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+  test("minhash and prefix pair rows equal the exact ngram jaccard rows") {
+    // ngramJaccardPairs (inverted-index self-join, sizes attached by join)
+    // is the reference implementation: every pair the two verified
+    // families emit (docsets + sorted-array intersection) must carry
+    // exactly the reference's n_common and sizes. The prefix path is
+    // exact, so it must also find every reference pair.
     import spark.implicits._
-    def minhash() = graft.llm.Dedup.minhashLshPairs(docs, 3, 64, 16, 4, 5)
-      .select("doc_a", "doc_b", "n_common", "size_a", "size_b")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    def ngram() = graft.llm.Dedup.ngramJaccardPairsPrefix(docs, 3, 4, 5)
-      .select("doc_a", "doc_b", "n_common", "size_a", "size_b")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val (mSmall, nSmall) = (minhash(), ngram())
-    graft.engine.QueryCaches.releaseAll(spark, blocking = true)
-    val saved = graft.llm.Dedup.VerifyHashJoinMinPosts
-    try {
-      graft.llm.Dedup.VerifyHashJoinMinPosts = 0L
-      assert(minhash() == mSmall, "wide regime changed minhash pair output")
-      assert(ngram() == nSmall, "wide regime changed ngram pair output")
-    } finally {
-      graft.llm.Dedup.VerifyHashJoinMinPosts = saved
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val docs = spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_a", "doc_b", "n_common", "size_a", "size_b")
+          .as[(Long, Long, Long, Long, Long)].collect().toSet
+      val lsh = rows(graft.llm.Dedup.minhashLshPairs(docs, 3, 64, 16, 4, 5))
+      val exact = rows(graft.llm.Dedup.ngramJaccardPairs(docs, 3, 4, 5))
+      assert(lsh.nonEmpty, s"$sf: minhash found no pair")
+      assert(lsh.subsetOf(exact),
+        s"$sf: minhash rows absent from the exact reference: ${(lsh -- exact).take(5)}")
+      assert(rows(graft.llm.Dedup.ngramJaccardPairsPrefix(docs, 3, 4, 5)) == exact,
+        s"$sf: prefix rows differ from the exact reference")
       graft.engine.QueryCaches.releaseAll(spark, blocking = true)
     }
   }

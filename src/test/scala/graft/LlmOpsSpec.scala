@@ -67,11 +67,11 @@ class LlmOpsSpec extends SparkSuite {
     // both regimes: the fixture-default path AND the wide path with the
     // sizing estimator forced on (h-partitioned posts fill + per-doc
     // table + exchange-free df-attach), each against the naive join
-    val prevMin = Dedup.VerifyHashJoinMinPosts
+    val prevMin = Dedup.PrefixDocTableMinPosts
     val prevSample = Dedup.PrefixSampleMinDocs
     try {
       for (wide <- Seq(false, true); (num, den) <- Seq((7, 10), (4, 5), (1, 2))) {
-        Dedup.VerifyHashJoinMinPosts = if (wide) 1L else prevMin
+        Dedup.PrefixDocTableMinPosts = if (wide) 1L else prevMin
         Dedup.PrefixSampleMinDocs = if (wide) 1L else prevSample
         assert(canon(Dedup.ngramJaccardPairsPrefix(df, 3, num, den)) ==
           canon(Dedup.ngramJaccardPairs(df, 3, num, den)),
@@ -79,7 +79,7 @@ class LlmOpsSpec extends SparkSuite {
         graft.engine.QueryCaches.releaseAll(spark, blocking = true)
       }
     } finally {
-      Dedup.VerifyHashJoinMinPosts = prevMin
+      Dedup.PrefixDocTableMinPosts = prevMin
       Dedup.PrefixSampleMinDocs = prevSample
     }
   }
@@ -102,18 +102,16 @@ class LlmOpsSpec extends SparkSuite {
     val plan = kept.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"length filter must not add a shuffle:\n$plan")
-    // the piggyback regime (forced by lowering the ceiling) must agree
-    // exactly, and must plan its prune joins shuffle-hash, never sort-merge
-    val prev = Dedup.SizesBroadcastMax
-    try {
-      Dedup.SizesBroadcastMax = 0L
-      val wide = Dedup.lengthCompatible(cands, sizes, num = 4, den = 5, parts = 4)
-      assert(wide.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet == pairs,
-        "piggyback regime must be output-identical to the broadcast regime")
-      val wplan = wide.queryExecution.executedPlan.toString
-      assert(!wplan.contains("SortMergeJoin"),
-        s"piggyback prune joins must not sort the candidate stream:\n$wplan")
-    } finally Dedup.SizesBroadcastMax = prev
+    // the piggyback regime (forced by a doc count past the ceiling) must
+    // agree exactly, and must plan its prune joins shuffle-hash, never
+    // sort-merge
+    val wide = Dedup.lengthCompatible(cands, sizes, num = 4, den = 5, parts = 4,
+      nDocsKnown = Some(graft.engine.Sizing.SizesBroadcastMaxDocs + 1))
+    assert(wide.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet == pairs,
+      "piggyback regime must be output-identical to the broadcast regime")
+    val wplan = wide.queryExecution.executedPlan.toString
+    assert(!wplan.contains("SortMergeJoin"),
+      s"piggyback prune joins must not sort the candidate stream:\n$wplan")
   }
 
   test("containment flags a short doc quoted inside a long one; jaccard does not") {
@@ -1070,6 +1068,32 @@ class LlmOpsSpec extends SparkSuite {
       Similarity.clearCalibrationCache()
       build()
       assert(settled() > afterAutoCold, "clearCalibrationCache must force a fresh calibration")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.engine.QueryCaches.releaseAll(spark, blocking = true)
+    }
+  }
+
+  test("minhashLshPairs at sf0.01 builds and runs in at most 15 jobs") {
+    // Every cache is counted once, by its own fill: postings and docsets
+    // are the only fills, and signatures, sizes and verification all read
+    // the docsets. A path that re-counts a cache, fills a separate sizes
+    // relation or re-scans the text for signatures adds jobs here: the
+    // two-shape form (postings counted three times, a sizes fill, text
+    // kernel signatures) ran 25 on this test's local[4] session.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    graft.engine.QueryCaches.releaseAll(spark, blocking = true)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Dedup.minhashLshPairs(docs, 3, 64, 16, 4, 5).collect().nonEmpty)
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      assert(jobs.get() <= 15, s"minhashLshPairs ran ${jobs.get()} jobs")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       graft.engine.QueryCaches.releaseAll(spark, blocking = true)
